@@ -4,7 +4,11 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Extra keys: ``docs_per_sec`` (flagship annotate throughput) and, with
+Extra keys: ``docs_per_sec`` (flagship annotate throughput),
+``ceiling_alu``/``ceiling_membw`` (this box's ALU and memory-bandwidth
+efficiency at $SPARK_GRAFT_CPUS processes, at most one per usable core,
+against one process, probed right after the headline queries so every
+wall-clock figure carries the contention it ran under) and, with
 ``--scaling``, the two-parallelism scaling protocol mandated by
 BASELINE.md §6 (no real cluster in the sandbox): the SAME job on the SAME
 input at local[4] vs local[16] (this silicon stops scaling past ~16
@@ -129,8 +133,6 @@ HEADLINE = [
     "annotate_stemmed",       # Porter-stemmed fused annotate (round-3)
     "lang_id",
     "quality",
-    "tpch_q5",                # 6-way join plumbing (subsumes q1/q3)
-    "events_hourly",
     "bgp_typed_mentions",     # KG read path: 3-pattern SPARQL BGP over
                               # the materialized snapshot (round-4)
     "decontam_overlap",       # benchmark eval-leak gram probe (session 8)
@@ -171,19 +173,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     spark = build_spark(cpus)
     # registry + rotated-out pairs (HEADLINE stays round-over-round
     # comparable even when a query rotates out of the 50-slot window)
-    qs = dict(Q.queries())
-    qs.setdefault("tpch_q5", Q.q_tpch_q5)
-    qs.setdefault("bgp_typed_mentions", Q.q_bgp_typed_mentions)
-    qs.setdefault("events_hourly", Q.q_events_hourly)  # rotated out s8
-    qs.setdefault("jaccard_pairs", Q.q_jaccard_pairs)  # swapped out s10
-    qs.setdefault("entity_provenance", Q.q_entity_provenance)  # rotated pair
-    qs.setdefault("annotate_stemmed", Q.q_annotate_stemmed)  # rotated out r5
-    qs.setdefault("quality", Q.q_quality)  # rotated out r5 (8th rotation)
-    qs.setdefault("entity_walks", Q.q_entity_walks)  # rotated pair (r5)
-    qs.setdefault("annotate_prior", Q.q_annotate_prior)  # rotated out r5 (13th)
-    qs.setdefault("minhash_pairs", Q.q_minhash_pairs)  # rotated out r5 (17th)
-    qs.setdefault("lang_id", Q.q_lang_id)  # rotated out r5 (19th)
-    qs.setdefault("ann_topk", Q.q_ann_topk)  # rotated out r5 (20th)
+    qs = {name: q for name, q, _ in Q.PAIRS}
     # warm up JVM + Python workers + compile/broadcast the static model so
     # per-query times measure the steady-state plan, not one-time setup
     Q._docs(spark, sf_dir).limit(8).mapInPandas(
@@ -221,6 +211,10 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     total = round(sum(times.values()), 3)
     docs_per_sec = round(n_docs / times["annotate_generative"], 2)
     spark.stop()
+    # the box's parallel efficiency at `cpus` processes vs one, measured
+    # now so the wall-clock figures above carry the contention they saw
+    # (capped at the usable cores: more processes only oversubscribe)
+    ceiling = hardware_ceiling(1, min(cpus, len(os.sched_getaffinity(0))))
     return {
         "metric": "headline_suite_total",
         "value": total,
@@ -231,6 +225,8 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "cpus": cpus,
         "n_docs": n_docs,
         "docs_per_sec": docs_per_sec,
+        "ceiling_alu": ceiling["alu"],
+        "ceiling_membw": ceiling["membw"],
     }
 
 
@@ -326,7 +322,7 @@ def hardware_ceiling(n_small: int, n_big: int) -> dict:
 
     def eff(fn, warm_arg, arg) -> float:
         def rate(procs: int) -> float:
-            with mp.Pool(procs) as p:
+            with mp.get_context("spawn").Pool(procs) as p:
                 p.map(fn, [warm_arg] * procs)
                 t0 = _t.perf_counter()
                 p.map(fn, [arg] * (procs * 4))
@@ -511,7 +507,7 @@ def _compact_headline(result: dict) -> dict:
     drop the raw sample arrays, which live in BENCH_DETAIL.json."""
     out = {k: result[k] for k in
            ("metric", "value", "unit", "sf", "cpus", "n_docs",
-            "docs_per_sec") if k in result}
+            "docs_per_sec", "ceiling_alu", "ceiling_membw") if k in result}
     out["queries"] = {k: round(v, 2)
                       for k, v in result.get("queries", {}).items()}
     qm = result.get("query_metrics", {})

@@ -1,7 +1,8 @@
 """Large-scale training-data pipeline operators (driver brief): dedup
 (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding cosine),
 similarity search (brute-force + LSH ANN), text analysis (lang-ID,
-quality, token counts, fingerprints), multimodal column plumbing.
+quality, token counts, fingerprints), plus the KG graph, reasoning and
+curation operators the jobs compose.
 
 All operators are pure-DataFrame (JVM-side expressions) where possible so
 Catalyst keeps pushdown/codegen; Python appears only in Arrow-batched

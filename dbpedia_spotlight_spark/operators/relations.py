@@ -19,9 +19,9 @@ Scale shape (100 TB):
   groups them into per-doc sorted arrays; document text is NOT in that
   shuffle.
 - One doc-keyed join co-locates the mention array with the text.
-  Bucket both sides by doc_id (operators/layout.py) to make it
-  exchange-free; mentions produced in the same job can simply keep the
-  annotate output's partitioning.
+  Bucketing both sides by doc_id makes it exchange-free; mentions
+  produced in the same job can simply keep the annotate output's
+  partitioning.
 - Pair building, span slicing, normalization and all gates run inside
   whole-stage codegen (sequence/transform/filter/substr — zero UDFs);
   the only strings that leave the document row are the ≤ ``max_gap``-

@@ -341,55 +341,3 @@ def kmv_count(sketch: DataFrame, key_cols: list[str],
                                    / F.col("hk").cast("double")),
                         4).alias("est")))
 
-
-def kmv_jaccard(sketch: DataFrame, key_cols: list[str],
-                k: int = 256) -> DataFrame:
-    """Pairwise Jaccard estimates between every two keys, straight
-    from their bottom-k sketches — the coordinated-sampling payoff
-    (Beyer et al. 2007; Cohen & Kaplan's coordinated samples): because
-    every key kept the k smallest hashes of the SAME hash function,
-    the bottom-k of the union U_k is computable from the two sketches
-    alone, and J ≈ |U_k ∩ A ∩ B| / |U_k| is unbiased. "How much do
-    these two hosts'/days' url sets overlap" without ever rescanning
-    either side.
-
-    All-integer until the single ratio division — value-identical
-    across engines. Cost: the sketch table is keys×k rows; the pair
-    expansion is |keys|² sketch-row joins — this is an ALL-PAIRS
-    operator over the (small) key universe, by design; gate upstream
-    if the key space is corpus-sized (same contract as the dedup
-    family's analysis modes)."""
-    ka = [f"{c}_a" for c in key_cols]
-    kb = [f"{c}_b" for c in key_cols]
-    a = sketch.select(*[F.col(c).alias(f"{c}_a") for c in key_cols], "h")
-    b = sketch.select(*[F.col(c).alias(f"{c}_b") for c in key_cols], "h")
-    keys_a = a.select(*ka).distinct()
-    keys_b = b.select(*kb).distinct()
-    lt = (F.concat_ws("\x01", *[F.col(c) for c in ka])
-          < F.concat_ws("\x01", *[F.col(c) for c in kb]))
-    # canonical unordered pairs via tuple-as-string compare (struct
-    # comparison chokes on differing field names; \x01 can't appear in
-    # key values under this repo's normalization)
-    pairs = keys_a.crossJoin(keys_b).filter(lt)
-    ua = (pairs.join(a, ka).select(*ka, *kb, "h",
-                                   F.lit(1).alias("in_a"),
-                                   F.lit(0).alias("in_b")))
-    ub = (pairs.join(b, kb).select(*ka, *kb, "h",
-                                   F.lit(0).alias("in_a"),
-                                   F.lit(1).alias("in_b")))
-    u = (ua.unionByName(ub)
-         .groupBy(*ka, *kb, "h")
-         .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b")))
-    from pyspark.sql import Window
-    w = Window.partitionBy(*ka, *kb).orderBy("h")
-    topk = u.withColumn("rn", F.row_number().over(w)) \
-        .filter(F.col("rn") <= k)
-    return (topk.groupBy(*ka, *kb)
-            .agg(F.count("*").alias("u"),
-                 F.sum(F.col("in_a") * F.col("in_b")).alias("i"))
-            .select(*ka, *kb,
-                    F.col("u").cast("long").alias("union_k"),
-                    F.col("i").cast("long").alias("both"),
-                    F.round(F.col("i").cast("double")
-                            / F.col("u").cast("double"), 9)
-                    .alias("jaccard_est")))

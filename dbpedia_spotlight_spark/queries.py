@@ -1,8 +1,8 @@
 """Driver-contract query registry: Spark callables + DuckDB oracle SQL.
 
-Every operator from SURVEY.md §2 is registered here as a
-(spark_query, oracle_sql) pair over the driver's parquet tables
-(``documents``, ``embeddings``, ``events``, TPC-H). The Spark side runs
+Every operator from SURVEY.md §2 is bound here, once, in ``PAIRS``: a
+(name, spark_query, oracle_sql) row over the driver's parquet tables
+(``documents``, ``embeddings``, ``events``). The Spark side runs
 the engine's real operators; the oracle side is independent ANSI SQL that
 DuckDB evaluates on the same data — they can only agree if the operator
 semantics are right.
@@ -11,8 +11,8 @@ All 50 registered queries are oracle-paired, including the
 imperative-looking ones: the fused flagship (FSA spotting + generative
 disambiguation) collapses to relational algebra on this corpus
 (``_sql_generative``), winnowing/MinHash/SimHash recompute their
-md5-derived hashes in SQL, fixed-fixture paths (multimodal, TSV, wiki,
-spot-XML) use golden expectations, and the real-table ``ann_ivf``
+md5-derived hashes in SQL, fixed-fixture paths (TSV, wiki, spot-XML)
+use golden expectations, and the real-table ``ann_ivf``
 unrolls its 5 Lloyd iterations as DuckDB CTE chains (the trainer is
 partition-layout-independent, so both engines see the same sample in
 the same order).
@@ -2225,7 +2225,7 @@ def q_wiki_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     template/ref/comment stripping, anchor offsets into the PLAIN text,
     media/category links dropped, K3 URI encoding. Oracle = golden rows
     recomputed driver-side from the same fixture (checks the
-    mapInPandas plumbing + URI wiring end-to-end, like frame_sample)."""
+    mapInPandas plumbing + URI wiring end-to-end)."""
     from dbpedia_spotlight_spark.sources.wikimarkup import wiki_links
     df = spark.createDataFrame(_WIKI_FIXTURE, "url string, wikitext string")
     return wiki_links(df)
@@ -3121,221 +3121,8 @@ def sql_near_dup_embeddings() -> str:
 
 
 # ---------------------------------------------------------------------------
-# relational / agg plumbing over TPC-H-ish tables + events
+# skew-safe per-user top-k over events (operators/skew.py)
 # ---------------------------------------------------------------------------
-
-
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pricing-summary groupBy-agg (decimal-exact sums cast to double)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        # NTZ literal: a plain cast("timestamp") would parse in the
-        # session timezone and shift the boundary vs DuckDB's naive
-        # comparison when the driver session is not UTC
-        li.filter(F.col("l_shipdate")
-                  <= F.to_timestamp_ntz(F.lit("1998-09-02")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("count_order"),
-            F.sum(F.col("l_quantity").cast("decimal(12,2)"))
-             .cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))
-             .cast("double").alias("sum_base_price"),
-            F.sum(F.col("l_discount").cast("decimal(12,6)"))
-             .cast("double").alias("sum_discount"),
-        )
-    )
-
-
-def sql_tpch_q1() -> str:
-    return """
-  SELECT l_returnflag, l_linestatus,
-         count(*) AS count_order,
-         CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS sum_base_price,
-         CAST(sum(CAST(l_discount AS DECIMAL(12,6))) AS DOUBLE)
-           AS sum_discount
-  FROM lineitem
-  WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-  GROUP BY l_returnflag, l_linestatus"""
-
-
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping-priority 3-way join + agg (broadcast dims, decimal-exact)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(14,2)")
-                 * (F.lit(1).cast("decimal(3,2)")
-                    - F.col("l_discount").cast("decimal(3,2)")))
-            ).cast("double").alias("revenue")
-        )
-        .select(
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_orderpriority", "revenue",
-        )
-    )
-
-
-def sql_tpch_q3() -> str:
-    return """
-  SELECT o_orderkey,
-         strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-         o_orderpriority,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(14,2))
-                  * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
-              AS DOUBLE) AS revenue
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment = 'BUILDING'
-  GROUP BY o_orderkey, o_orderdate, o_orderpriority"""
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based event sessionization (window lag → running sum →
-    groupBy) — batch form of the stateful streaming operator."""
-    from dbpedia_spotlight_spark.operators.sessionize import sessionize
-    return sessionize(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def sql_sessionize() -> str:
-    from dbpedia_spotlight_spark.operators.sessionize import sql_sessionize
-    return sql_sessionize()
-
-
-def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local-supplier-volume 6-way join (region→nation→customer/supplier
-    →orders→lineitem) — the multi-hop broadcast-dim join pattern."""
-    t = {n: spark.read.parquet(f"{sf_dir}/{n}.parquet")
-         for n in ("region", "nation", "customer", "supplier",
-                   "orders", "lineitem")}
-    return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["supplier"]),
-              (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(t["nation"]),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(14,2)")
-                 * (F.lit(1).cast("decimal(3,2)")
-                    - F.col("l_discount").cast("decimal(3,2)")))
-            ).cast("double").alias("revenue"),
-        )
-    )
-
-
-def sql_tpch_q5() -> str:
-    return """
-  SELECT r_name, n_name, count(*) AS n_items,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(14,2))
-                  * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
-              AS DOUBLE) AS revenue
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  JOIN region   ON n_regionkey = r_regionkey
-  GROUP BY r_name, n_name"""
-
-
-def q_order_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window analytics: per-customer running order total + order index
-    (frame-spec windows — the reference has none (§2.15); this checks the
-    engine plumbing used by D5–D7)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    return orders.select(
-        "o_custkey", "o_orderkey",
-        F.row_number().over(w).alias("order_idx"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).over(run)
-         .cast("double").alias("running_total"),
-        F.lag(F.col("o_totalprice").cast("decimal(18,2)")).over(w)
-         .cast("double").alias("prev_price"),
-    )
-
-
-def sql_order_running_totals() -> str:
-    return """
-  SELECT o_custkey, o_orderkey,
-         CAST(row_number() OVER w AS INTEGER) AS order_idx,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER
-              (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-           AS running_total,
-         CAST(lag(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-           AS prev_price
-  FROM orders
-  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)"""
-
-
-def q_part_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi/anti-join + conditional agg over part/lineitem: per p_type,
-    parts ordered at least once vs never ordered."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ordered = part.join(li, part.p_partkey == li.l_partkey, "left_semi")
-    never = part.join(li, part.p_partkey == li.l_partkey, "left_anti")
-    return (
-        ordered.groupBy("p_type").agg(
-            F.count("*").alias("n_ordered"),
-            F.sum(F.col("p_retailprice").cast("decimal(14,2)"))
-             .cast("double").alias("retail_sum"),
-        )
-        .join(
-            never.groupBy("p_type").agg(F.count("*").alias("n_never")),
-            "p_type", "full_outer",
-        )
-        .select(
-            "p_type",
-            F.coalesce("n_ordered", F.lit(0)).alias("n_ordered"),
-            F.coalesce("retail_sum", F.lit(0.0)).alias("retail_sum"),
-            F.coalesce("n_never", F.lit(0)).alias("n_never"),
-        )
-    )
-
-
-def sql_part_type_stats() -> str:
-    return """
-  WITH ordered AS (
-    SELECT * FROM part WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
-  ),
-  never AS (
-    SELECT * FROM part
-    WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem)
-  ),
-  o AS (
-    SELECT p_type, count(*) AS n_ordered,
-           CAST(sum(CAST(p_retailprice AS DECIMAL(14,2))) AS DOUBLE)
-             AS retail_sum
-    FROM ordered GROUP BY p_type
-  ),
-  n AS (SELECT p_type, count(*) AS n_never FROM never GROUP BY p_type)
-  SELECT COALESCE(o.p_type, n.p_type) AS p_type,
-         COALESCE(n_ordered, 0) AS n_ordered,
-         COALESCE(retail_sum, 0.0) AS retail_sum,
-         COALESCE(n_never, 0) AS n_never
-  FROM o FULL OUTER JOIN n ON o.p_type = n.p_type"""
 
 
 def q_salted_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3364,124 +3151,6 @@ def sql_salted_user_topk() -> str:
                               ORDER BY value DESC, event_id ASC) AS rank
     FROM events)
   WHERE rank <= 3"""
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time hourly rollup (batch form of the streaming window agg)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss")
-             .alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-             .cast("double").alias("sum_value"),
-        )
-    )
-
-
-def sql_events_hourly() -> str:
-    return """
-  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-         event_type,
-         count(*) AS n_events,
-         CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-  FROM events
-  GROUP BY 1, 2"""
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing (golden-expectation oracles; deterministic synthetic media)
-# ---------------------------------------------------------------------------
-
-
-def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image feature extraction over the deterministic fake-media table —
-    scalar columns only for the driver canonicalizer (the 8-dim embedding
-    array stays in the operator API and is pytest-checked). Paired with a
-    golden-expectation oracle (``sql_image_features``) computed driver-side
-    from the same deterministic payloads — it verifies the mapInPandas
-    plumbing (distribution, Arrow binary transfer, kind filter, schema)
-    end-to-end, like ``frame_sample``."""
-    from dbpedia_spotlight_spark.operators.multimodal import (
-        image_features, make_fake_media,
-    )
-    return image_features(make_fake_media(spark), fake_decode=True).select(
-        "media_id", "n_bytes", "byte_mean", "byte_entropy", "phash"
-    )
-
-
-def sql_image_features() -> str:
-    """Golden VALUES for q_image_features: payloads reconstructed from the
-    documented make_fake_media recipe (seed=3, kind cycle image/audio/video,
-    payload len in [64,512)), features recomputed with the same numpy
-    expression trees so doubles are bit-identical (repr round-trips)."""
-    import random
-    import numpy as np
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(64):
-        kind = ("image", "audio", "video")[i % 3]
-        payload = bytes(rng.randrange(256) for _ in range(rng.randrange(64, 512)))
-        if kind != "image":
-            continue
-        arr = np.frombuffer(payload, dtype=np.uint8)
-        counts = np.bincount(arr, minlength=256).astype(np.float64)
-        p = counts / counts.sum()
-        ent = float(-(p[p > 0] * np.log2(p[p > 0])).sum())
-        pad = (-len(arr)) % 64
-        a2 = np.concatenate([arr, np.zeros(pad, dtype=np.uint8)]) if pad else arr
-        img = a2.reshape(-1, 64).mean(axis=0).reshape(8, 8)
-        mean = img.mean()
-        bits = (img > mean).flatten()
-        phash = 0
-        for j, bit in enumerate(bits):
-            if bit:
-                phash |= (1 << j)
-        if phash >= (1 << 63):
-            phash -= (1 << 64)
-        rows.append((i, len(payload), float(arr.mean()), ent, phash))
-    # doubles go through VARCHAR→DOUBLE casts: a bare decimal literal is
-    # parsed as DECIMAL by DuckDB and re-rounded, losing the exact double
-    values = ",\n    ".join(
-        f"({mid}, {nb}, CAST('{bm!r}' AS DOUBLE), CAST('{be!r}' AS DOUBLE), {ph})"
-        for (mid, nb, bm, be, ph) in rows
-    )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id,"
-        " CAST(n_bytes AS BIGINT) AS n_bytes,"
-        " CAST(byte_mean AS DOUBLE) AS byte_mean,"
-        " CAST(byte_entropy AS DOUBLE) AS byte_entropy,"
-        " CAST(phash AS BIGINT) AS phash"
-        f" FROM (VALUES {values}) AS t(media_id, n_bytes, byte_mean,"
-        " byte_entropy, phash)"
-    )
-
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbpedia_spotlight_spark.operators.multimodal import (
-        make_fake_media, sample_frames,
-    )
-    return sample_frames(make_fake_media(spark), every_ms=1000)
-
-
-def sql_frame_sample() -> str:
-    # golden expectation: media ids ≡ 2 (mod 3) are videos of 5000 ms →
-    # frames 0..4 at 1000 ms steps (deterministic make_fake_media grid)
-    rows = ", ".join(
-        f"({mid}, {fi}, {fi * 1000})"
-        for mid in range(2, 64, 3) for fi in range(5)
-    )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id,"
-        " CAST(frame_idx AS INTEGER) AS frame_idx,"
-        " CAST(offset_ms AS BIGINT) AS offset_ms"
-        f" FROM (VALUES {rows}) AS t(media_id, frame_idx, offset_ms)"
-    )
 
 
 def q_pii_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8742,57 +8411,6 @@ def sql_vocab_growth(n: int = 10) -> str:
   ORDER BY checkpoint"""
 
 
-def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise audience overlap between event types straight from
-    their bottom-k sketches (operators/sketches.py::kmv_jaccard — the
-    coordinated-sampling payoff: union bottom-k computable from the
-    sketches alone). All-integer until the single ratio division."""
-    from dbpedia_spotlight_spark.operators.sketches import (
-        kmv_jaccard, kmv_sketch,
-    )
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sk = kmv_sketch(events, ["event_type"], "user_id", k=64)
-    return (kmv_jaccard(sk, ["event_type"], k=64)
-            .orderBy("event_type_a", "event_type_b"))
-
-
-def sql_kmv_overlap(k: int = 64) -> str:
-    return f"""
-  WITH h AS (
-    SELECT DISTINCT event_type,
-           ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
-             AS h
-    FROM events),
-  bk AS (
-    SELECT event_type, h FROM (
-      SELECT event_type, h, row_number() OVER (
-        PARTITION BY event_type ORDER BY h) AS rn
-      FROM h) q WHERE rn <= {k}),
-  keys AS (SELECT DISTINCT event_type FROM bk),
-  pairs AS (
-    SELECT a.event_type AS ka, b.event_type AS kb
-    FROM keys a, keys b WHERE a.event_type < b.event_type),
-  u AS (
-    SELECT ka, kb, h, max(in_a) AS in_a, max(in_b) AS in_b FROM (
-      SELECT p.ka, p.kb, s.h, 1 AS in_a, 0 AS in_b
-      FROM pairs p JOIN bk s ON s.event_type = p.ka
-      UNION ALL
-      SELECT p.ka, p.kb, s.h, 0, 1
-      FROM pairs p JOIN bk s ON s.event_type = p.kb) q
-    GROUP BY 1, 2, 3),
-  t AS (
-    SELECT *, row_number() OVER (PARTITION BY ka, kb ORDER BY h) AS rn
-    FROM u)
-  SELECT ka AS event_type_a, kb AS event_type_b,
-         CAST(count(*) AS BIGINT) AS union_k,
-         CAST(sum(in_a * in_b) AS BIGINT) AS both,
-         round(CAST(sum(in_a * in_b) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE), 9) AS jaccard_est
-  FROM t WHERE rn <= {k}
-  GROUP BY 1, 2
-  ORDER BY 1, 2"""
-
-
 def q_wl_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-WL color refinement over the co-mention graph
     (operators/graph.py::wl_colors, 3 rounds): structural role
@@ -9053,297 +8671,189 @@ def sql_jsonld_extract() -> str:
 # ---------------------------------------------------------------------------
 
 
+# One row per (name, Spark query, DuckDB oracle) binding. The first
+# REGISTERED rows are the driver registry in driver order: the driver
+# checks at most the first 50 keys in order, so queries without a prior
+# green CORRECTNESS row lead. The rows after them are pairs rotated out
+# of the registry; they stay working and oracle-checked.
+PAIRS: list[tuple[str, Callable[[SparkSession, str], DataFrame],
+                  Callable[[], str]]] = [
+    ("meta_triples", q_meta_triples, sql_meta_triples),
+    ("jsonld_extract", q_jsonld_extract, sql_jsonld_extract),
+    ("k_truss", q_k_truss, sql_k_truss),
+    ("coreness", q_coreness, sql_coreness),
+    ("kn_perplexity", q_kn_perplexity, sql_kn_perplexity),
+    ("kmv_users", q_kmv_users, sql_kmv_users),
+    ("hyperball", q_ball_sizes, sql_ball_sizes),
+    ("betweenness", q_betweenness, sql_betweenness),
+    ("node2vec", q_node2vec, sql_node2vec),
+    ("fact_allen", q_fact_allen, sql_fact_allen),
+    ("entity_summary", q_entity_summary, sql_entity_summary),
+    ("type_prediction", q_type_prediction, sql_type_prediction),
+    ("kg_transe", q_kg_transe, sql_kg_transe),
+    ("nil_clusters", q_nil_clusters, sql_nil_clusters),
+    ("fused_truth", q_fused_truth, sql_fused_truth),
+    ("link_prediction", q_link_prediction, sql_link_prediction),
+    ("canonical_relations", q_canonical_relations, sql_canonical_relations),
+    ("mention_relations", q_mention_relations, sql_mention_relations),
+    ("dsir_select", q_dsir_select, sql_dsir_select),
+    ("dup_span_stats", q_dup_span_stats, sql_dup_span_stats),
+    ("quality_logreg", q_quality_logreg, sql_quality_logreg),
+    ("sparql_text", q_sparql_text, sql_sparql_text),
+    ("shape_report", q_shape_report, sql_shape_report),
+    ("owl_entail", q_owl_entail, sql_owl_entail),
+    ("graph_provenance", q_graph_provenance, sql_graph_provenance),
+    ("decontam_overlap", q_decontam_overlap, sql_decontam_overlap),
+    ("ngram_perplexity", q_ngram_perplexity, sql_ngram_perplexity),
+    ("infer_domain_range", q_infer_domain_range, sql_infer_domain_range),
+    ("bgp_agg_type_counts", q_bgp_agg_type_counts, sql_bgp_agg_type_counts),
+    ("pii_counts", q_pii_counts, sql_pii_counts),
+    ("hash_split", q_hash_split, sql_hash_split),
+    ("warc_source", q_warc_source, sql_warc_source),
+    ("triple_delta", q_triple_delta, sql_triple_delta),
+    ("ann_ivf", q_ann_ivf, sql_ann_ivf),
+    ("dedup_components", q_dedup_components, sql_dedup_components),
+    # Spotlight pipeline — relational slice (SQL-checked)
+    ("annotate_confident", q_annotate_confident, sql_annotate_confident),
+    ("candidates_topk", q_candidates_topk, sql_candidates_topk),
+    ("link_triples", q_link_triples, sql_link_triples),
+    ("entity_graph_nodes", q_entity_graph_nodes, sql_entity_graph_nodes),
+    ("entity_graph_edges", q_entity_graph_edges, sql_entity_graph_edges),
+    ("entity_pagerank", q_entity_pagerank, sql_entity_pagerank),
+    # full fused pipeline
+    ("annotate_generative", q_annotate_generative, sql_annotate_generative),
+    ("annotate_typed", q_annotate_typed, sql_annotate_typed),
+    ("spot_fsa", q_spot_fsa, sql_spot_fsa),
+    ("model_build", q_model_build, sql_model_build),
+    ("model_entities", q_model_entities, sql_model_entities),
+    # training-data ops
+    ("simhash_near_pairs", q_simhash_near_pairs, sql_simhash_near_pairs),
+    ("jaccard_lsh_verified", q_jaccard_lsh_verified, sql_jaccard_lsh_verified),
+    ("winnowing", q_winnowing, sql_winnowing),
+    # similarity search
+    ("near_dup_embeddings", q_near_dup_embeddings, sql_near_dup_embeddings),
+    # rotated out of the registry: still oracle-checked by
+    # tests/test_rotated_queries.py
+    ("ann_lsh", q_ann_lsh, sql_ann_lsh),
+    ("tsv_lexicon", q_tsv_lexicon, sql_tsv_lexicon),
+    ("relation_signatures", q_relation_signatures, sql_relation_signatures),
+    ("spotxml_disambiguate", q_spotxml_disambiguate, sql_spotxml_disambiguate),
+    ("sameas_functional", q_sameas_functional, sql_sameas_functional),
+    ("owl_violations", q_owl_violations, sql_owl_violations),
+    ("fact_episodes", q_fact_episodes, sql_fact_episodes),
+    ("fusion_trust", q_fusion_trust, sql_fusion_trust),
+    ("annotate_prior", q_annotate_prior, sql_annotate_prior),
+    ("spot_unigram", q_spot_unigram, sql_spot_unigram),
+    ("extract_text", q_extract_text, sql_extract_text),
+    ("schema_graph", q_schema_graph, sql_schema_graph),
+    ("dedup_exact", q_dedup_exact, sql_dedup_exact),
+    ("shortest_paths", q_shortest_paths, sql_shortest_paths),
+    ("minhash_pairs", q_minhash_pairs, sql_minhash_pairs),
+    ("kg_distmult", q_kg_distmult, sql_kg_distmult),
+    ("harmonic_centrality", q_harmonic_centrality, sql_harmonic_centrality),
+    ("jsonld_render", q_jsonld_render, sql_jsonld_render),
+    ("lang_id", q_lang_id, sql_lang_id),
+    ("ann_topk", q_ann_topk, sql_ann_topk),
+    ("kg_complex", q_kg_complex, sql_kg_complex),
+    ("kg_digest", q_kg_digest, sql_kg_digest),
+    ("spot_multitoken", q_spot_multitoken, sql_spot_multitoken),
+    ("quantized_uri_counts", q_quantized_uri_counts, sql_quantized_uri_counts),
+    ("simhash", q_simhash, sql_simhash),
+    ("jaccard_pairs", q_jaccard_pairs, sql_jaccard_pairs),
+    ("ann_ivf_fixed", q_ann_ivf_fixed, sql_ann_ivf_fixed),
+    ("fingerprint", q_fingerprint, sql_fingerprint),
+    ("token_count", q_token_count, sql_token_count),
+    ("annotate_quantized", q_annotate_quantized, sql_annotate_quantized),
+    ("annotate_coref", q_annotate_coref, sql_annotate_coref),
+    ("host_skew", q_host_skew, sql_host_skew),
+    ("mirror_hosts", q_mirror_hosts, sql_mirror_hosts),
+    ("temperature_mix", q_temperature_mix, sql_temperature_mix),
+    ("dup_spans", q_dup_spans, sql_dup_spans),
+    ("corpus_filter", q_corpus_filter, sql_corpus_filter),
+    ("quality", q_quality, sql_quality),
+    ("bm25_rank", q_bm25_rank, sql_bm25_rank),
+    ("chunk_windows", q_chunk_windows, sql_chunk_windows),
+    ("clean_boilerplate", q_clean_boilerplate, sql_clean_boilerplate),
+    ("anchor_lexicon", q_anchor_lexicon, sql_anchor_lexicon),
+    ("charset_sniff", q_charset_sniff, sql_charset_sniff),
+    ("robots_gate", q_robots_gate, sql_robots_gate),
+    ("ntriples", q_ntriples, sql_ntriples),
+    ("ntriples_roundtrip", q_ntriples_roundtrip, sql_ntriples_roundtrip),
+    ("turtle_render", q_turtle_render, sql_turtle_render),
+    ("sitemap_frontier", q_sitemap_frontier, sql_sitemap_frontier),
+    ("kg_stats", q_kg_stats, sql_kg_stats),
+    ("entity_neighbors", q_entity_neighbors, sql_entity_neighbors),
+    ("fetch_rounds", q_fetch_rounds, sql_fetch_rounds),
+    ("type_triples", q_type_triples, sql_type_triples),
+    ("infer_types", q_infer_types, sql_infer_types),
+    ("bgp_typed_mentions", q_bgp_typed_mentions, sql_bgp_typed_mentions),
+    ("bgp_path_supertypes", q_bgp_path_supertypes, sql_bgp_path_supertypes),
+    ("kg_type_cardinality", q_kg_type_cardinality, sql_kg_type_cardinality),
+    ("construct_mention_types", q_construct_mention_types,
+     sql_construct_mention_types),
+    ("bgp_optional_types", q_bgp_optional_types, sql_bgp_optional_types),
+    ("bgp_union_mentions", q_bgp_union_mentions, sql_bgp_union_mentions),
+    ("bgp_values_minus", q_bgp_values_minus, sql_bgp_values_minus),
+    ("entity_triangles", q_entity_triangles, sql_entity_triangles),
+    ("wiki_links", q_wiki_links, sql_wiki_links),
+    ("entity_salience", q_entity_salience, sql_entity_salience),
+    ("entity_walks", q_entity_walks, sql_entity_walks),
+    ("walk_skipgrams", q_walk_skipgrams, sql_walk_skipgrams),
+    ("cms_counts", q_cms_counts, sql_cms_counts),
+    ("owl_chains", q_owl_chains, sql_owl_chains),
+    ("owl_restrictions", q_owl_restrictions, sql_owl_restrictions),
+    ("host_hits", q_host_hits, sql_host_hits),
+    ("uri_counts", q_uri_counts, sql_uri_counts),
+    ("pair_counts", q_pair_counts, sql_pair_counts),
+    ("bgp_select_page", q_bgp_select_page, sql_bgp_select_page),
+    ("bgp_sequence_path", q_bgp_sequence_path, sql_bgp_sequence_path),
+    ("bgp_not_exists", q_bgp_not_exists, sql_bgp_not_exists),
+    ("mention_contexts", q_mention_contexts, sql_mention_contexts),
+    ("describe_entity", q_describe_entity, sql_describe_entity),
+    ("ppr_related", q_ppr_related, sql_ppr_related),
+    ("lpa_communities", q_lpa_communities, sql_lpa_communities),
+    ("pmi_edges", q_pmi_edges, sql_pmi_edges),
+    ("candidates_generative", q_candidates_generative,
+     sql_candidates_generative),
+    ("model_token_counts", q_model_token_counts, sql_model_token_counts),
+    ("vocab_counts", q_vocab_counts, sql_vocab_counts),
+    ("hll_users", q_hll_users, sql_hll_users),
+    ("text_embeddings", q_text_embeddings, sql_text_embeddings),
+    ("bloom_seen", q_bloom_seen, sql_bloom_seen),
+    ("pack_sequences", q_pack_sequences, sql_pack_sequences),
+    ("line_dedup", q_line_dedup, sql_line_dedup),
+    ("er_sameas", q_er_sameas, sql_er_sameas),
+    ("kg_embed_examples", q_kg_embed_examples, sql_kg_embed_examples),
+    ("update_migrate", q_update_migrate, sql_update_migrate),
+    ("ranking_eval", q_ranking_eval, sql_ranking_eval),
+    ("sf_totals", q_sf_totals, sql_sf_totals),
+    ("entity_provenance", q_entity_provenance, sql_entity_provenance),
+    ("redirect_closure", q_redirect_closure, sql_redirect_closure),
+    ("annotate_stemmed", q_annotate_stemmed, sql_annotate_stemmed),
+    ("annotate_tficf", q_annotate_tficf, sql_annotate_tficf),
+    ("latest_capture", q_latest_capture, sql_latest_capture),
+    ("canonical_urls", q_canonical_urls, sql_canonical_urls),
+    ("salted_user_topk", q_salted_user_topk, sql_salted_user_topk),
+    ("fact_windows", q_fact_windows, sql_fact_windows),
+    ("spot_npchunk", q_spot_npchunk, sql_spot_npchunk),
+    ("quality_gopher", q_quality_gopher, sql_quality_gopher),
+    ("seeded_types", q_seeded_types, sql_seeded_types),
+    ("subsample_tokens", q_subsample_tokens, sql_subsample_tokens),
+    ("wl_roles", q_wl_roles, sql_wl_roles),
+    ("zipf_fit", q_zipf_fit, sql_zipf_fit),
+    ("vocab_growth", q_vocab_growth, sql_vocab_growth),
+    ("modularity", q_modularity, sql_modularity),
+    ("assortativity", q_assortativity, sql_assortativity),
+    ("priority_sample", q_priority_sample, sql_priority_sample),
+]
+REGISTERED = 50
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 entries — the driver checks at most the first 50 registry
-    keys in order, so queries without a prior green CORRECTNESS row lead.
-    Operators whose dedicated query rotated out stay externally exercised
-    through a containing query: spot_multitoken ⊂ spot_fsa,
-    quantized_uri_counts ⊂ annotate_quantized, simhash ⊂
-    simhash_near_pairs, jaccard_lsh_verified ⊂ jaccard_pairs+minhash_pairs,
-    ann_ivf_fixed ⊂ ann_ivf (now fully oracle-paired), fingerprint ⊂
-    winnowing, token_count ⊂ quality_gopher (n_tokens), tpch_q1/q3 and
-    order_running_totals ⊂ tpch_q5 + sessionize/salted_user_topk window
-    plumbing (the rotated q_/sql_ functions remain in this module and in
-    pytest). Round-4 rotation: pii_counts + hash_split in (previously
-    pytest-only); annotate_quantized + annotate_coref out (3 rounds
-    green; M6 stays covered by functions/quantize tests + the rotated
-    pair, F5 by the rotated pair — both still DuckDB-mirrored in
-    tests/test_rotated_queries.py). Round-4 second rotation: the
-    web-scale KG ops warc_source + triple_delta + latest_capture +
-    canonical_urls in (previously rotated-pytest only — the on-brief
-    Common-Crawl ingestion and KG-maintenance surface now carries hard
-    driver signal); candidates_generative (C1 ⊂ candidates_topk +
-    annotate_generative), model_token_counts (M4 ⊂ model_build),
-    vocab_counts (⊂ quality_gopher gram stats) and tpch_q5 (generic
-    relational plumbing; part_type_stats keeps the join/agg slice) out
-    — all four stay DuckDB-mirrored in tests/test_rotated_queries.py.
-    Round-4 third rotation: infer_domain_range (rdfs:2/3 property-schema
-    entailment) + bgp_agg_type_counts (SPARQL 1.1 aggregation) in — the
-    session's new operator families now carry hard driver signal;
-    uri_counts + pair_counts out (M1/M2, green since round 1, both
-    recomputed inside the model_build ★ oracle and still DuckDB-mirrored
-    in tests/test_rotated_queries.py).
-    Round-4 fourth rotation (session 8): decontam_overlap (benchmark
-    eval-leak n-gram overlap) + ngram_perplexity (relational bigram-LM
-    CCNet quality signal) in — both new operator families on real
-    driver tables; frame_sample (trivial deterministic grid, now
-    superseded by the REAL y4m frame_features + its pytest battery) and
-    events_hourly (green since round 1; streaming twin keeps the
-    semantics pinned) out — both stay DuckDB-mirrored in
-    tests/test_rotated_queries.py.
-    Round-4 fifth rotation (session 10): owl_entail (OWL-RL property
-    axioms + rdfs:5/7) + graph_provenance (named-graph quad querying)
-    in — the reasoning/provenance completion now carries hard driver
-    signal; sf_totals + redirect_closure out (M3/K1, green since round
-    1, both recomputed inside the model_build ★ oracle) — both stay
-    DuckDB-mirrored in tests/test_rotated_queries.py. Session-10 swap:
-    jaccard_lsh_verified (the PRODUCTION LSH→exact-verify composition,
-    bounded at any scale) replaces jaccard_pairs (the uncapped
-    all-pairs oracle form — the one registry plan shape that could not
-    run at 100×; it stays exact and DuckDB-mirrored in the rotated
-    suite as the oracle harness it is).
-    Round-5 sixth rotation: sparql_text (the SPARQL 1.1 text front-end —
-    parser → planner dispatch, the round-4 session's biggest user-facing
-    surface) + shape_report (SHACL-core-lite validation, all 8
-    constraint components) in — both previously rotated-pytest only,
-    re-verified against their DuckDB oracles at sf0.01 before the swap;
-    annotate_stemmed + annotate_tficf out (T2/D3, green since round 1;
-    stemming stays pinned by tests/test_stemmer.py + the rotated pair,
-    TF-ICF by the rotated pair — both still DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 seventh rotation: dup_span_stats (exact duplicate-span
-    dedup, Lee et al. 2022 ExactSubstr at word-13-gram granularity —
-    the new operators/spandedup.py family) in, verified against its
-    DuckDB oracle at sf0.001 AND sf0.01 before the swap; corpus_filter
-    out (a pure composition of lang_id + quality, BOTH of which remain
-    registered — the composition stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 eighth rotation: quality_logreg (model-based quality gate —
-    distributed logistic regression, operators/classifier.py, the
-    CCNet/DCLM classifier-filter pattern; 20-step GD replayed as
-    unrolled MATERIALIZED CTEs in DuckDB, bit-identical at both SFs
-    before the swap) in; quality out (green since round 1; its six
-    features are recomputed VERBATIM inside the quality_logreg oracle
-    via sql_quality, and the pair stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 ninth rotation: dsir_select (DSIR importance-resampling
-    data selection toward a target reference, Xie et al. 2023 —
-    operators/dsir.py, hashed-n-gram bucket models + deterministic
-    Gumbel top-k; full relational DuckDB oracle, bit-identical at
-    sf0.001 AND sf0.01 before the swap) in; ann_lsh out (green since
-    round 2; its hyperplane-LSH machinery stays exercised inside the
-    registered near_dup_embeddings, and the pair stays DuckDB-mirrored
-    in tests/test_rotated_queries.py).
-    Round-5 tenth rotation: mention_relations (open relation extraction
-    between adjacent disambiguated mentions — operators/relations.py,
-    the ReVerb-shaped triple-extraction completion of the KG story;
-    oracle replays the full annotate chain + adjacency + span
-    normalization, bit-identical at sf0.001 AND sf0.01 before the swap)
-    in; tsv_lexicon out (S5 importer, green since round 1 — the TSV
-    parse + priors math stay DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 eleventh rotation: canonical_relations (owl:sameAs
-    canonicalization of the relation table — alias merge via the
-    canonical map, collapsed self-pairs dropped, exact n_docs through
-    the per-doc state; oracle replays the whole chain relationally,
-    green at sf0.001 AND sf0.01 before the swap) in;
-    spotxml_disambiguate out (S2 source, 2 rows, green since round 1 —
-    the spot-XML parse + disambiguation stay DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 twelfth rotation: link_prediction (KG completion — common-
-    neighbors / Jaccard / Adamic-Adar over the co-mention graph,
-    operators/graph.py::link_prediction, wedge-center enumeration with
-    the hub cap; oracle replays the wedge joins + anti-join
-    relationally, green at sf0.001 AND sf0.01 before the swap) in;
-    wiki_links out (S3 source, green since round 1 — the wiki-markup
-    parse stays DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 thirteenth rotation: fused_truth (truth discovery /
-    knowledge fusion — operators/fusion.py, the normalized-voting
-    trust⇄belief fixpoint over conflicting multi-source claims; 5
-    rounds replayed as unrolled MATERIALIZED CTEs in DuckDB, green at
-    sf0.001 AND sf0.01 before the swap; companion fusion_trust pair in
-    the rotated suite) in; annotate_prior out (D8 prior-only baseline,
-    green since round 1 — prior scoring stays exercised inside
-    annotate_generative + candidates_topk and the pair stays
-    DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 fourteenth rotation: nil_clusters (NIL clustering — the
-    emergent-entity half of C3 NIL handling: blocking on the casefolded
-    surface key, sorted-neighborhood pairs, hashed-context cosine
-    verify, min-label components — operators/nilcluster.py; oracle
-    replays every stage incl. the propagation rounds as unrolled
-    MATERIALIZED CTEs, bit-identical at sf0.001 AND sf0.01 before the
-    swap) in; spot_unigram out (T1/T5, green since round 1 — tokenizer
-    + case normalization stay exercised inside spot_fsa and every
-    pipeline query, and the pair stays DuckDB-mirrored in
-    tests/test_rotated_queries.py).
-    Round-5 seventeenth rotation: node2vec (p/q-biased second-order
-    walks — integer bias weights + md5-mod-cumsum selection,
-    operators/walks.py::node2vec_walks; oracle replays the weighted
-    pick via window cumsum + EXISTS probe, green at sf0.001 AND
-    sf0.01 before the swap) in; minhash_pairs out (green since round
-    2 — the MinHash+LSH banding machinery stays exercised inside the
-    registered jaccard_lsh_verified composition, and the pair stays
-    DuckDB-mirrored in tests/test_rotated_queries.py).
-    Round-5 eighteenth rotation: fact_allen (Allen interval algebra
-    over fact-validity episodes — triples.py::allen_relations, all 7
-    canonical relations planted incl. the live-episode +∞ lane;
-    oracle replays the pair expansion as a row-comparison self-join
-    + CASE ladder, green at sf0.001 AND sf0.01 before the swap) in;
-    sessionize out (green since round 3 — per-user window semantics
-    stay pinned by its pytests, the applyInPandasWithState streaming
-    twin, and the registered salted_user_topk window plumbing; the
-    pair stays DuckDB-mirrored in tests/test_rotated_queries.py)
-    Round-5 nineteenth + twentieth rotations: hyperball (HyperBall
-    neighborhood function — per-(node, radius) HLL ball sizes via
-    register max-merge, operators/graph.py::ball_sizes; oracle = exact
-    balls from an all-sources recursive BFS + the same md5-register /
-    integer-exact estimator replay) and betweenness (exact all-sources
-    Brandes over the backbone — dyadic 2^-30-quantized backward terms,
-    generated per-level sigma/delta CTE oracle), both green at
-    sf0.001 AND sf0.01 before the swap, in; lang_id (green r1-r4; the
-    n-gram profile pair stays DuckDB-mirrored in the rotated suite)
-    and ann_topk (green r1-r4; brute-force cosine top-k stays
-    exercised as the exact-verify shape inside the registered
-    near_dup_embeddings and the ann_ivf probe; pair DuckDB-mirrored)
-    out.
-    Round-5 rotations 25-26 (continued session): meta_triples +
-    jsonld_extract in (the structured-data extraction lane — the most
-    on-brief new surface: KG triples from raw Common-Crawl-style HTML;
-    both green vs DuckDB at sf0.001 AND sf0.01 first, and the JSON-LD
-    oracle runs a REAL JSON parser in BOTH engines); spot_npchunk +
-    quality_gopher out (green since round 2 — NP-chunk spotting stays
-    pinned by the pipeline pytests and its rotated pair, the Gopher
-    gates by tests/test_plans_scale.py's single-scan pin, the
-    quality_logreg oracle's verbatim feature recompute, and the
-    rotated pair).
-    Round-5 rotations 21-24 (continued session): k_truss (4-truss
-    peeling over the co-mention graph — edge-level cohesion,
-    operators/graph.py::k_truss; oracle unrolls the peel past the
-    idempotent fixpoint), coreness (full core-number decomposition via
-    the H-operator iteration, histogram-shaped rounds; unrolled
-    H-index CTE oracle), kn_perplexity (interpolated Kneser-Ney — the
-    KenLM smoothing — relational train+score), and kmv_users (bottom-k
-    KMV distinct sketch: exact below capacity at sf0.001, Beyer
-    estimator branch at sf0.01), all green at sf0.001 AND sf0.01
-    before the swap, in; latest_capture + canonical_urls (green since
-    their round-4 rotation; recrawl dedup + URL canonicalization stay
-    DuckDB-mirrored in the rotated suite), image_features (green since
-    round 2; the codec battery in tests/test_codecs_multimodal.py and
-    the rotated audio/frame pairs keep the decode seam pinned) and
-    salted_user_topk (green since round 2; the two-phase salted-agg
-    device stays pinned by its pytest equivalence and the pair stays
-    DuckDB-mirrored) out."""
-    return {
-        # --- queries with no prior external CORRECTNESS row run FIRST ---
-        "meta_triples": q_meta_triples,
-        "jsonld_extract": q_jsonld_extract,
-        "k_truss": q_k_truss,
-        "coreness": q_coreness,
-        "kn_perplexity": q_kn_perplexity,
-        "kmv_users": q_kmv_users,
-        "hyperball": q_ball_sizes,
-        "betweenness": q_betweenness,
-        "node2vec": q_node2vec,
-        "fact_allen": q_fact_allen,
-        "entity_summary": q_entity_summary,
-        "type_prediction": q_type_prediction,
-        "kg_transe": q_kg_transe,
-        "nil_clusters": q_nil_clusters,
-        "fused_truth": q_fused_truth,
-        "link_prediction": q_link_prediction,
-        "canonical_relations": q_canonical_relations,
-        "mention_relations": q_mention_relations,
-        "dsir_select": q_dsir_select,
-        "dup_span_stats": q_dup_span_stats,
-        "quality_logreg": q_quality_logreg,
-        "sparql_text": q_sparql_text,
-        "shape_report": q_shape_report,
-        "owl_entail": q_owl_entail,
-        "graph_provenance": q_graph_provenance,
-        "decontam_overlap": q_decontam_overlap,
-        "ngram_perplexity": q_ngram_perplexity,
-        "infer_domain_range": q_infer_domain_range,
-        "bgp_agg_type_counts": q_bgp_agg_type_counts,
-        "pii_counts": q_pii_counts,
-        "hash_split": q_hash_split,
-        "warc_source": q_warc_source,
-        "triple_delta": q_triple_delta,
-        "ann_ivf": q_ann_ivf,
-        "dedup_components": q_dedup_components,
-        # Spotlight pipeline — relational slice (SQL-checked)
-        "annotate_confident": q_annotate_confident,
-        "candidates_topk": q_candidates_topk,
-        "link_triples": q_link_triples,
-        "entity_graph_nodes": q_entity_graph_nodes,
-        "entity_graph_edges": q_entity_graph_edges,
-        "entity_pagerank": q_entity_pagerank,
-        # full fused pipeline
-        "annotate_generative": q_annotate_generative,
-        "annotate_typed": q_annotate_typed,
-        "spot_fsa": q_spot_fsa,
-        "model_build": q_model_build,
-        "model_entities": q_model_entities,
-        # training-data ops
-        "simhash_near_pairs": q_simhash_near_pairs,
-        "jaccard_lsh_verified": q_jaccard_lsh_verified,
-        "winnowing": q_winnowing,
-        # similarity search
-        "near_dup_embeddings": q_near_dup_embeddings,
-    }
+    """The driver registry: the first REGISTERED rows of PAIRS."""
+    return {name: q for name, q, _ in PAIRS[:REGISTERED]}
 
 
 def oracle_sql() -> dict[str, str]:
-    """Key order MATCHES queries() exactly (positional and key-based
-    consumers agree — the driver checks the first 50 in order)."""
-    return {
-        "meta_triples": sql_meta_triples(),
-        "jsonld_extract": sql_jsonld_extract(),
-        "k_truss": sql_k_truss(),
-        "coreness": sql_coreness(),
-        "kn_perplexity": sql_kn_perplexity(),
-        "kmv_users": sql_kmv_users(),
-        "hyperball": sql_ball_sizes(),
-        "betweenness": sql_betweenness(),
-        "node2vec": sql_node2vec(),
-        "fact_allen": sql_fact_allen(),
-        "entity_summary": sql_entity_summary(),
-        "type_prediction": sql_type_prediction(),
-        "kg_transe": sql_kg_transe(),
-        "nil_clusters": sql_nil_clusters(),
-        "fused_truth": sql_fused_truth(),
-        "link_prediction": sql_link_prediction(),
-        "canonical_relations": sql_canonical_relations(),
-        "mention_relations": sql_mention_relations(),
-        "dsir_select": sql_dsir_select(),
-        "dup_span_stats": sql_dup_span_stats(),
-        "quality_logreg": sql_quality_logreg(),
-        "sparql_text": sql_sparql_text(),
-        "shape_report": sql_shape_report(),
-        "owl_entail": sql_owl_entail(),
-        "graph_provenance": sql_graph_provenance(),
-        "decontam_overlap": sql_decontam_overlap(),
-        "ngram_perplexity": sql_ngram_perplexity(),
-        "infer_domain_range": sql_infer_domain_range(),
-        "bgp_agg_type_counts": sql_bgp_agg_type_counts(),
-        "pii_counts": sql_pii_counts(),
-        "hash_split": sql_hash_split(),
-        "warc_source": sql_warc_source(),
-        "triple_delta": sql_triple_delta(),
-        "ann_ivf": sql_ann_ivf(),
-        "dedup_components": sql_dedup_components(),
-        "annotate_confident": sql_annotate_confident(),
-        "candidates_topk": sql_candidates_topk(),
-        "link_triples": sql_link_triples(),
-        "entity_graph_nodes": sql_entity_graph_nodes(),
-        "entity_graph_edges": sql_entity_graph_edges(),
-        "entity_pagerank": sql_entity_pagerank(),
-        "annotate_generative": sql_annotate_generative(),
-        "annotate_typed": sql_annotate_typed(),
-        "spot_fsa": sql_spot_fsa(),
-        "model_build": sql_model_build(),
-        "model_entities": sql_model_entities(),
-        "simhash_near_pairs": sql_simhash_near_pairs(),
-        "jaccard_lsh_verified": sql_jaccard_lsh_verified(),
-        "winnowing": sql_winnowing(),
-        "near_dup_embeddings": sql_near_dup_embeddings(),
-    }
+    """Oracle SQL for queries(), with the same keys in the same order."""
+    return {name: sql() for name, _, sql in PAIRS[:REGISTERED]}

@@ -19,8 +19,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("ENTRY_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
+TABLES = ("events", "documents", "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -102,3 +101,16 @@ def test_registered_queries_emit_scalar_columns_only(spark):
 def test_every_oracle_has_a_query():
     missing = set(entry_mod.oracle_sql()) - set(entry_mod.queries())
     assert not missing, missing
+
+
+def test_registry_is_fifty_unique_rows_of_one_table():
+    """queries() and oracle_sql() are the first 50 rows of one table:
+    the same 50 names in the same order, and no name bound twice
+    anywhere in the table (a dict built from it would silently keep
+    only one of the bindings). Needs no Spark session."""
+    from dbpedia_spotlight_spark import queries as Q
+    names = [name for name, _, _ in Q.PAIRS]
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1)
+    assert len(entry_mod.queries()) == 50
+    assert list(entry_mod.queries()) == list(entry_mod.oracle_sql())

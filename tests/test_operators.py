@@ -1,5 +1,5 @@
-"""Training-data operators: dedup, similarity search, text stats,
-multimodal plumbing — exercised on /root/testdata/sf0.001 tables."""
+"""Training-data operators: dedup, similarity search, text stats —
+exercised on /root/testdata/sf0.001 tables."""
 
 from __future__ import annotations
 
@@ -270,43 +270,6 @@ def test_content_fingerprint_normalizes_ws(spark):
     }))
     fp = content_fingerprint(docs).toPandas()
     assert fp["fingerprint"].iat[0] == fp["fingerprint"].iat[1]
-
-
-# ----------------------------------------------------------- multimodal --
-
-def test_image_features_deterministic(spark):
-    from dbpedia_spotlight_spark.operators.multimodal import (
-        image_features, make_fake_media,
-    )
-
-    media = make_fake_media(spark, n=30)
-    f1 = image_features(media).toPandas().sort_values("media_id").reset_index(drop=True)
-    f2 = image_features(media).toPandas().sort_values("media_id").reset_index(drop=True)
-    assert f1.drop(columns=["embedding"]).equals(f2.drop(columns=["embedding"]))
-    assert (f1["n_bytes"] > 0).all()
-    assert len(f1["embedding"].iat[0]) == 8
-    assert f1["byte_entropy"].between(0, 8).all()
-
-
-def test_real_decode_raises(spark):
-    from dbpedia_spotlight_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x00\x01")
-
-
-def test_sample_frames_grid(spark):
-    from dbpedia_spotlight_spark.operators.multimodal import (
-        make_fake_media, sample_frames,
-    )
-
-    media = make_fake_media(spark, n=30)
-    out = sample_frames(media, every_ms=1000).toPandas()
-    assert set(out.columns) == {"media_id", "frame_idx", "offset_ms"}
-    assert (out["offset_ms"] == out["frame_idx"] * 1000).all()
-    # 5000ms videos at 1000ms → 5 frames each
-    per = out.groupby("media_id").size()
-    assert (per == 5).all()
 
 
 def test_connected_components_matches_union_find(spark):
@@ -656,41 +619,6 @@ def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
     gens = [d for d in os.listdir(ck)
             if d.startswith("pr-ranks-") and "-gen-" in d]
     assert len(gens) <= 2, f"rank generations accumulated: {gens}"
-
-
-def test_audio_features_deterministic_and_payload_never_shuffled(spark):
-    """audio_features: real Spark plumbing over the stubbed decode seam
-    (probe: no soundfile/librosa wheel in this container) — values must
-    match a driver-side numpy replay exactly, and the plan must be a
-    single mapInPandas pass with no Exchange touching the payload."""
-    import numpy as np
-    from dbpedia_spotlight_spark.operators.multimodal import (
-        audio_features, decode_audio, make_fake_media,
-    )
-    media = make_fake_media(spark)
-    out = audio_features(media)
-    rows = {r["media_id"]: r for r in out.collect()}
-    local = {r["media_id"]: bytes(r["payload"])
-             for r in media.filter("kind = 'audio'").collect()}
-    assert set(rows) == set(local) and rows
-
-    for mid, payload in local.items():
-        x = decode_audio(payload, fake=True)
-        r = rows[mid]
-        assert r["n_bytes"] == len(payload)
-        assert r["n_samples"] == len(x)
-        assert abs(r["rms"] - float(np.sqrt((x * x).mean()))) < 1e-12
-        assert 0.0 <= r["zcr"] <= 1.0
-        assert abs(r["peak"] - float(np.abs(x).max())) < 1e-12
-        assert len(r["embedding"]) == 8
-
-    plan = audio_features(media)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
-
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        decode_audio(b"\x01\x02", fake=False)
 
 
 CANON_CASES = [

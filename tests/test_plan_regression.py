@@ -49,19 +49,7 @@ def _headline_queries():
     import bench
     from dbpedia_spotlight_spark import queries as Q
 
-    qs = dict(Q.queries())
-    qs.setdefault("tpch_q5", Q.q_tpch_q5)
-    qs.setdefault("bgp_typed_mentions", Q.q_bgp_typed_mentions)
-    qs.setdefault("events_hourly", Q.q_events_hourly)
-    qs.setdefault("jaccard_pairs", Q.q_jaccard_pairs)
-    qs.setdefault("entity_provenance", Q.q_entity_provenance)
-    qs.setdefault("annotate_stemmed", Q.q_annotate_stemmed)
-    qs.setdefault("quality", Q.q_quality)
-    qs.setdefault("entity_walks", Q.q_entity_walks)
-    qs.setdefault("annotate_prior", Q.q_annotate_prior)
-    qs.setdefault("minhash_pairs", Q.q_minhash_pairs)
-    qs.setdefault("lang_id", Q.q_lang_id)
-    qs.setdefault("ann_topk", Q.q_ann_topk)
+    qs = {name: q for name, q, _ in Q.PAIRS}
     return [(name, qs[name]) for name in bench.HEADLINE]
 
 

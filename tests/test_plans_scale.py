@@ -53,12 +53,6 @@ def test_relational_joins_are_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_tpch_q3_broadcasts_customer(spark):
-    from dbpedia_spotlight_spark import queries as Q
-    plan = _plan(Q.q_tpch_q3(spark, "/root/testdata/sf0.001"))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_minhash_plan_has_no_python(spark):
     """Signatures must stay JVM-side (no Python UDF in the scan)."""
     from dbpedia_spotlight_spark.operators.dedup import minhash_signatures
@@ -80,9 +74,10 @@ def test_aggregations_partial_before_shuffle(spark):
     """groupBy aggregations must map-side combine (partial_* before the
     Exchange) — the shuffle carries |groups|, not |rows|."""
     from dbpedia_spotlight_spark import queries as Q
-    plan = _plan(Q.q_tpch_q1(spark, "/root/testdata/sf0.001"))
-    assert "partial_sum" in plan and "Exchange" in plan
-    assert plan.index("partial_sum") > plan.index("Exchange")  # below it
+    plan = _plan(Q.q_hll_users(spark, "/root/testdata/sf0.001"))
+    shuffle = "Exchange hashpartitioning(event_type"
+    assert "partial_sum" in plan and shuffle in plan
+    assert plan.index("partial_sum") > plan.index(shuffle)  # below it
 
 
 def test_embedding_lsh_pairs_no_cartesian(spark):

@@ -1,376 +1,21 @@
 """The 50-slot registry rotation must not rot the rotated-out query/
-oracle pairs: they stay in `queries.py` as working (Spark, DuckDB-SQL)
-pairs and this module keeps checking them exactly like the registry
-mirror (`test_entry_contract`), at sf0.001.
+oracle pairs: they stay in `queries.PAIRS` after the registered rows as
+working (Spark, DuckDB-SQL) pairs, and this module keeps checking them
+exactly like the registry mirror (`test_entry_contract`), at sf0.001.
 """
 
 from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from dbpedia_spotlight_spark import queries as Q
-from tests.test_entry_contract import TABLES, _assert_frames_equal
+from tests.test_entry_contract import _assert_frames_equal, duck  # noqa: F401
 
 SF_DIR = os.environ.get("ENTRY_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-ROTATED = [
-    # round-5 ninth rotation OUT: hyperplane-LSH machinery stays
-    # exercised inside the registered near_dup_embeddings
-    ("ann_lsh", Q.q_ann_lsh, Q.sql_ann_lsh),
-    # round-5 tenth rotation OUT: the S5 TSV importer + priors math
-    ("tsv_lexicon", Q.q_tsv_lexicon, Q.sql_tsv_lexicon),
-    # round-5 addition: typed relation-schema induction over the
-    # registered mention_relations (oracle re-derives the whole chain)
-    ("relation_signatures", Q.q_relation_signatures,
-     Q.sql_relation_signatures),
-    # round-5 eleventh rotation OUT: S2 spot-XML source + its
-    # disambiguation (canonical_relations took its registry slot)
-    ("spotxml_disambiguate", Q.q_spotxml_disambiguate,
-     Q.sql_spotxml_disambiguate),
-    # round-5 addition: OWL-RL prp-fp/prp-ifp identity inference from
-    # declared (inverse-)functional properties, dirty-key cap
-    # non-vacuous (a value shared by every doc is excluded whole)
-    ("sameas_functional", Q.q_sameas_functional,
-     Q.sql_sameas_functional),
-    # round-5 addition: OWL 2 RL consistency checking (cax-dw, prp-pdw,
-    # prp-irp, prp-asyp, eq-diff1) — the false-consequence half of the
-    # profile, planted clash + clean lanes per rule
-    ("owl_violations", Q.q_owl_violations, Q.sql_owl_violations),
-    # round-5 addition: temporal fact versioning — the delta_log folded
-    # into validity intervals (lead-over-fact-key window both engines)
-    ("fact_episodes", Q.q_fact_episodes, Q.sql_fact_episodes),
-    # round-5 addition: final per-source reliability from the same
-    # truth-discovery fixpoint the registered fused_truth runs
-    ("fusion_trust", Q.q_fusion_trust, Q.sql_fusion_trust),
-    # round-5 thirteenth rotation OUT: D8 prior-only baseline (prior
-    # scoring stays inside annotate_generative + candidates_topk)
-    ("annotate_prior", Q.q_annotate_prior, Q.sql_annotate_prior),
-    # round-5 fourteenth rotation OUT: T1/T5 unigram spotting (stays
-    # exercised inside spot_fsa and every pipeline query)
-    ("spot_unigram", Q.q_spot_unigram, Q.sql_spot_unigram),
-    # round-5 fifteenth rotation OUT: generic relational join/agg slice
-    # (window/join plumbing stays registered via sessionize +
-    # salted_user_topk)
-    ("part_type_stats", Q.q_part_type_stats, Q.sql_part_type_stats),
-    # round-5 fifteenth rotation OUT: S1 byte-identical extraction
-    # (runs inside every pipeline query + its dedicated pytest gate)
-    ("extract_text", Q.q_extract_text, Q.sql_extract_text),
-    # round-5 addition: SchemEX-style quotient schema graph over the
-    # relation triples (companion of the registered entity_summary /
-    # type_prediction refinement family)
-    ("schema_graph", Q.q_schema_graph, Q.sql_schema_graph),
-    # round-5 sixteenth rotation OUT: exact dedup (hash-groupBy
-    # machinery stays exercised in dup_span_stats + line_dedup)
-    ("dedup_exact", Q.q_dedup_exact, Q.sql_dedup_exact),
-    # round-5 addition: multi-source BFS landmarks over the
-    # strongest-neighbor backbone of the co-mention graph — oracle is
-    # a genuine WITH RECURSIVE BFS at the same hop budget
-    ("shortest_paths", Q.q_shortest_paths, Q.sql_shortest_paths),
-    # round-5 seventeenth rotation OUT: MinHash+LSH banding (stays
-    # exercised inside the registered jaccard_lsh_verified)
-    ("minhash_pairs", Q.q_minhash_pairs, Q.sql_minhash_pairs),
-    # round-5 eighteenth rotation OUT: per-user session windows (own
-    # pytests + applyInPandasWithState streaming twin keep it pinned)
-    ("sessionize", Q.q_sessionize, Q.sql_sessionize),
-    # round-5 addition: DistMult KG-embedding training — the bilinear
-    # twin of the registered kg_transe, shared generated-CTE unroll
-    # with quantized-product gradient lists
-    ("kg_distmult", Q.q_kg_distmult, Q.sql_kg_distmult),
-    # round-5 addition: landmark-sampled harmonic centrality over the
-    # same backbone — exact-integer L/d sum device (L = lcm(1..hops)),
-    # so the double `harmonic` is bit-identical across engines
-    ("harmonic_centrality", Q.q_harmonic_centrality,
-     Q.sql_harmonic_centrality),
-    # round-5 addition: HyperBall neighborhood function — per-(node,
-    # radius) HLL ball-size estimates over the backbone; oracle = exact
-    # balls from an all-sources recursive BFS + the same md5 register /
-    # integer-exact estimator replay
-    # round-5 addition: JSON-LD writer over the shared serializer
-    # fixture — byte-exact node objects replayed relationally
-    ("jsonld_render", Q.q_jsonld_render, Q.sql_jsonld_render),
-    # round-5 nineteenth rotation OUT: n-gram language ID (green
-    # r1-r4; the profile scorer keeps its own pytests)
-    ("lang_id", Q.q_lang_id, Q.sql_lang_id),
-    # round-5 twentieth rotation OUT: brute-force cosine top-k (green
-    # r1-r4; the exact-verify shape stays inside near_dup_embeddings
-    # and the ann_ivf probe)
-    ("ann_topk", Q.q_ann_topk, Q.sql_ann_topk),
-    # round-5 addition: ComplEx KG-embedding training — the
-    # antisymmetry-capable third geometry through the shared trainer;
-    # oracle = the shared generated-CTE unroll with half-index complex
-    # gradient lists
-    ("kg_complex", Q.q_kg_complex, Q.sql_kg_complex),
-    # round-5 addition: snapshot content digest over the real link
-    # triples — exact integer md5 sum, the KGStore integrity record
-    ("kg_digest", Q.q_kg_digest, Q.sql_kg_digest),
-    ("spot_multitoken", Q.q_spot_multitoken, Q.sql_spot_multitoken),
-    ("quantized_uri_counts", Q.q_quantized_uri_counts,
-     Q.sql_quantized_uri_counts),
-    ("simhash", Q.q_simhash, Q.sql_simhash),
-    ("jaccard_pairs", Q.q_jaccard_pairs, Q.sql_jaccard_pairs),
-    ("ann_ivf_fixed", Q.q_ann_ivf_fixed, Q.sql_ann_ivf_fixed),
-    ("fingerprint", Q.q_fingerprint, Q.sql_fingerprint),
-    ("token_count", Q.q_token_count, Q.sql_token_count),
-    ("tpch_q1", Q.q_tpch_q1, Q.sql_tpch_q1),
-    ("tpch_q3", Q.q_tpch_q3, Q.sql_tpch_q3),
-    ("order_running_totals", Q.q_order_running_totals,
-     Q.sql_order_running_totals),
-    # round-4 rotation: M6 / F5 evidence moved here to free registry
-    # slots for pii_counts + hash_split
-    ("annotate_quantized", Q.q_annotate_quantized, Q.sql_annotate_quantized),
-    ("annotate_coref", Q.q_annotate_coref, Q.sql_annotate_coref),
-    # round-4 addition: host-level skew report (north_star mega-hosts)
-    ("host_skew", Q.q_host_skew, Q.sql_host_skew),
-    # round-4 addition: URL canonicalization + cross-host mirror report
-    ("mirror_hosts", Q.q_mirror_hosts, Q.sql_mirror_hosts),
-    # round-5 addition: Llama/CCNet temperature data mixing (weights +
-    # deterministic md5-gated resample)
-    ("temperature_mix", Q.q_temperature_mix, Q.sql_temperature_mix),
-    # round-5 addition: exact duplicate-span listing with gram text
-    # carried (string-level oracle certifies the xxhash64 match path)
-    ("dup_spans", Q.q_dup_spans, Q.sql_dup_spans),
-    # round-5 seventh rotation OUT: pure composition of lang_id +
-    # quality (quality itself rotated out in the eighth rotation —
-    # both compositions stay mirrored here)
-    ("corpus_filter", Q.q_corpus_filter, Q.sql_corpus_filter),
-    # round-5 eighth rotation OUT: quality's six features are
-    # recomputed verbatim inside the registered quality_logreg oracle
-    ("quality", Q.q_quality, Q.sql_quality),
-    # round-5 addition: BM25 ranked retrieval (Lucene-variant IDF) —
-    # retrieval-based decontam / audit / hard-negative mining primitive
-    ("bm25_rank", Q.q_bm25_rank, Q.sql_bm25_rank),
-    # round-5 addition: sliding-window LM chunking (HF overflowing-
-    # tokens stop rule), upstream of pack_sequences
-    ("chunk_windows", Q.q_chunk_windows, Q.sql_chunk_windows),
-    # round-4 addition: C4-style boilerplate line filter
-    ("clean_boilerplate", Q.q_clean_boilerplate, Q.sql_clean_boilerplate),
-    # round-4 addition: anchor-text lexicon (parser vs position oracle)
-    ("anchor_lexicon", Q.q_anchor_lexicon, Q.sql_anchor_lexicon),
-    # round-4 addition: charset cascade over planted raw page bytes
-    ("charset_sniff", Q.q_charset_sniff, Q.sql_charset_sniff),
-    # round-4 addition: robots.txt per-host gate (parser vs paper oracle)
-    ("robots_gate", Q.q_robots_gate, Q.sql_robots_gate),
-    # round-4 addition: N-Triples wire rendering (ECHAR/IRI escapes)
-    ("ntriples", Q.q_ntriples, Q.sql_ntriples),
-    # round-5 addition: N-Triples READER — render→parse round trip plus
-    # a raw UCHAR lane; oracle states the expected parse output
-    ("ntriples_roundtrip", Q.q_ntriples_roundtrip,
-     Q.sql_ntriples_roundtrip),
-    # round-5 addition: Turtle WRITER — subject-grouped statement
-    # blocks with prefix compaction; oracle rebuilds the blocks via
-    # lag-window separators + ordered string_agg
-    ("turtle_render", Q.q_turtle_render, Q.sql_turtle_render),
-    # round-4 addition: sitemap parse + crawl frontier (new/updated)
-    ("sitemap_frontier", Q.q_sitemap_frontier, Q.sql_sitemap_frontier),
-    # round-4 addition: per-predicate KG health metrics
-    ("kg_stats", Q.q_kg_stats, Q.sql_kg_stats),
-    # round-4 addition: KG read path — 2-hop co-mention BFS over the
-    # materialized snapshot (unrolled per-hop CTEs in DuckDB)
-    ("entity_neighbors", Q.q_entity_neighbors, Q.sql_entity_neighbors),
-    # round-4 addition: politeness fetch rounds over a skewed frontier
-    ("fetch_rounds", Q.q_fetch_rounds, Q.sql_fetch_rounds),
-    # round-4 addition: rdf:type statements of the materialized KG
-    ("type_triples", Q.q_type_triples, Q.sql_type_triples),
-    # round-4 addition: RDFS closure + type inheritance (rdfs:9/11)
-    ("infer_types", Q.q_infer_types, Q.sql_infer_types),
-    # round-4 addition: SPARQL-style BGP over the full triple snapshot
-    ("bgp_typed_mentions", Q.q_bgp_typed_mentions,
-     Q.sql_bgp_typed_mentions),
-    # round-4 addition: SPARQL 1.1 property path + FILTER in the BGP
-    # planner (predicate_closure inside the pattern frame)
-    ("bgp_path_supertypes", Q.q_bgp_path_supertypes,
-     Q.sql_bgp_path_supertypes),
-    # round-4 addition: functional-property audit over inferred types
-    ("kg_type_cardinality", Q.q_kg_type_cardinality,
-     Q.sql_kg_type_cardinality),
-    # round-4 addition: SPARQL CONSTRUCT — derived-predicate
-    # materialization from the property-path WHERE block
-    ("construct_mention_types", Q.q_construct_mention_types,
-     Q.sql_construct_mention_types),
-    # round-4 addition: SPARQL OPTIONAL with genuine unmatched (NULL)
-    # bindings over the corpus snapshot
-    ("bgp_optional_types", Q.q_bgp_optional_types,
-     Q.sql_bgp_optional_types),
-    # round-4 addition: SPARQL UNION with branch-exclusive variables
-    # null-padded per the SPARQL padding rule
-    ("bgp_union_mentions", Q.q_bgp_union_mentions,
-     Q.sql_bgp_union_mentions),
-    # round-4 addition: SPARQL VALUES + BIND + MINUS composed (inline
-    # solution table, computed binding, anti-join removal)
-    ("bgp_values_minus", Q.q_bgp_values_minus,
-     Q.sql_bgp_values_minus),
-    # round-4 addition: degree-ordered triangle counting + local
-    # clustering coefficients over the entity co-mention graph
-    ("entity_triangles", Q.q_entity_triangles,
-     Q.sql_entity_triangles),
-    # round-5 twelfth rotation OUT: S3 wiki-markup source, green since
-    # round 1 (link_prediction took its registry slot)
-    ("wiki_links", Q.q_wiki_links, Q.sql_wiki_links),
-    # round-5 addition: per-document entity salience (mention share ×
-    # lead position + tie-broken rank) over the real annotate chain
-    ("entity_salience", Q.q_entity_salience, Q.sql_entity_salience),
-    # round-5 addition: DeepWalk corpus — md5-deterministic walks over
-    # the co-mention graph, 3 transition steps unrolled as CTE joins
-    ("entity_walks", Q.q_entity_walks, Q.sql_entity_walks),
-    # round-5 addition: skip-gram pairs from the walk corpus (the
-    # embedding-corpus composition)
-    ("walk_skipgrams", Q.q_walk_skipgrams, Q.sql_walk_skipgrams),
-    # round-5 addition: count-min sketch frequency estimates at a
-    # collision-forcing width (cell arithmetic certified, not just
-    # pass-through counts)
-    ("cms_counts", Q.q_cms_counts, Q.sql_cms_counts),
-    # round-5 addition: OWL 2 RL prp-spo2 property chains (2- and
-    # 3-step, pre-asserted lane makes derived-minus-asserted bite)
-    ("owl_chains", Q.q_owl_chains, Q.sql_owl_chains),
-    # round-5 addition: OWL 2 RL class restrictions — cls-svf1/svf2/
-    # hv1/hv2/avf planted lanes, each rule selective
-    ("owl_restrictions", Q.q_owl_restrictions, Q.sql_owl_restrictions),
-    # round-4 addition: HITS hubs/authorities over the directed host
-    # link graph (real HTML anchor extraction; 10 L2-normalized
-    # iterations unrolled as MATERIALIZED CTE chains)
-    ("host_hits", Q.q_host_hits, Q.sql_host_hits),
-    # round-4 third rotation OUT: M1/M2 (green since round 1, both
-    # recomputed inside the model_build registry oracle)
-    ("uri_counts", Q.q_uri_counts, Q.sql_uri_counts),
-    ("pair_counts", Q.q_pair_counts, Q.sql_pair_counts),
-    # round-4 addition: SPARQL SELECT modifiers (projection + DISTINCT
-    # + total ORDER BY + OFFSET/LIMIT page)
-    ("bgp_select_page", Q.q_bgp_select_page, Q.sql_bgp_select_page),
-    # round-4 addition: SPARQL sequence property path (fresh-variable
-    # translation, internals unprojected)
-    ("bgp_sequence_path", Q.q_bgp_sequence_path, Q.sql_bgp_sequence_path),
-    # round-4 addition: SPARQL FILTER NOT EXISTS (anti-join filter)
-    ("bgp_not_exists", Q.q_bgp_not_exists, Q.sql_bgp_not_exists),
-    # round-4 addition: distant-supervision context-window export
-    ("mention_contexts", Q.q_mention_contexts, Q.sql_mention_contexts),
-    # round-4 addition: SPARQL DESCRIBE over the full snapshot
-    ("describe_entity", Q.q_describe_entity, Q.sql_describe_entity),
-    # round-4 addition: personalized PageRank (seed-teleport walk
-    # proximity; 10 unrolled iterations, 9dp contract)
-    ("ppr_related", Q.q_ppr_related, Q.sql_ppr_related),
-    # round-4 addition: deterministic label-propagation communities
-    # (4 unrolled synchronous rounds, max-weight/min-label argmin)
-    ("lpa_communities", Q.q_lpa_communities, Q.sql_lpa_communities),
-    # round-4 addition: PMI/NPMI association weighting of the entity
-    # co-mention graph (broadcast one-row N join, 9dp log contract)
-    ("pmi_edges", Q.q_pmi_edges, Q.sql_pmi_edges),
-    # round-4 second rotation OUT (3+ green rounds; coverage retained
-    # through containing registry queries — see queries() docstring)
-    ("candidates_generative", Q.q_candidates_generative,
-     Q.sql_candidates_generative),
-    ("model_token_counts", Q.q_model_token_counts,
-     Q.sql_model_token_counts),
-    ("vocab_counts", Q.q_vocab_counts, Q.sql_vocab_counts),
-    ("tpch_q5", Q.q_tpch_q5, Q.sql_tpch_q5),
-    # round-4 fourth rotation OUT (session 8): frame_sample's grid is
-    # superseded by real y4m frame_features; events_hourly green since
-    # round 1 with a streaming twin
-    ("frame_sample", Q.q_frame_sample, Q.sql_frame_sample),
-    ("events_hourly", Q.q_events_hourly, Q.sql_events_hourly),
-    # round-4 session-8 addition: mergeable HLL cardinality sketch
-    # (integer-exact register sum, value-identical across engines)
-    ("hll_users", Q.q_hll_users, Q.sql_hll_users),
-    # round-4 session-8 addition: feature-hashed text embeddings
-    # (signed hashed-TF, integer-exact norm, bit-identical vectors)
-    ("text_embeddings", Q.q_text_embeddings, Q.sql_text_embeddings),
-    # round-4 session-8 addition: mergeable Bloom seen-set (60-bit word
-    # packing + bit_or fold replayed exactly; no false negatives)
-    ("bloom_seen", Q.q_bloom_seen, Q.sql_bloom_seen),
-    # round-4 session-8 addition: deterministic sequence packing
-    # (sharded exclusive cumsum, integral div — no float-cast drift)
-    ("pack_sequences", Q.q_pack_sequences, Q.sql_pack_sequences),
-    # round-4 session-9 addition: C4 cross-document line dedup
-    # (kept-first by (doc_id, idx); texts never shuffle)
-    ("line_dedup", Q.q_line_dedup, Q.sql_line_dedup),
-    # round-4 session-10 addition: ER sameAs discovery (blocking +
-    # Levenshtein verify; over-cap block guard non-vacuous)
-    ("er_sameas", Q.q_er_sameas, Q.sql_er_sameas),
-    # round-4 session-10 addition: TransE-style KG-embedding export
-    # (deterministic md5 negative sampling, filtered setting)
-    ("kg_embed_examples", Q.q_kg_embed_examples, Q.sql_kg_embed_examples),
-    # round-4 session-10 addition: SPARQL 1.1 DELETE/INSERT WHERE
-    # (type-gated predicate migration; (G ∖ D) ∪ I set semantics)
-    ("update_migrate", Q.q_update_migrate, Q.sql_update_migrate),
-    # round-4 session-10 addition: link-prediction eval (MRR/Hits@k
-    # from higher/tied counts — no window, no sort)
-    ("ranking_eval", Q.q_ranking_eval, Q.sql_ranking_eval),
-    # session-10 fifth rotation: owl_entail + graph_provenance INTO the
-    # 50-slot registry (new operator families under driver signal);
-    # sf_totals + redirect_closure OUT (green since round 1, both
-    # recomputed inside the model_build registry oracle)
-    ("sf_totals", Q.q_sf_totals, Q.sql_sf_totals),
-    # session-10 addition: REAL-table quad provenance — annotate →
-    # as_quads → GRAPH-clause text query, distinct asserting pages
-    ("entity_provenance", Q.q_entity_provenance,
-     Q.sql_entity_provenance),
-    ("redirect_closure", Q.q_redirect_closure, Q.sql_redirect_closure),
-    # session-10 addition: OWL-RL property axioms (inverseOf /
-    # SymmetricProperty / TransitiveProperty incl. cycle self-loops)
-    # + rdfs:5/7 subproperty lift — closure unrolled 4 rounds in DuckDB
-    # session-10 addition: named-graph (quad) provenance querying —
-    # GRAPH clause in the text front-end over an as_quads store
-    # round-5 sixth rotation: sparql_text + shape_report INTO the
-    # 50-slot registry (text front-end + SHACL validation under hard
-    # driver signal); annotate_stemmed + annotate_tficf OUT (T2/D3,
-    # green since round 1 — stemming stays pinned by test_stemmer.py,
-    # TF-ICF by this pair)
-    ("annotate_stemmed", Q.q_annotate_stemmed, Q.sql_annotate_stemmed),
-    ("annotate_tficf", Q.q_annotate_tficf, Q.sql_annotate_tficf),
-    # round-5 rotations 21-24 OUT: recrawl dedup, URL canonicalization,
-    # the multimodal decode seam, and the two-phase salted agg keep
-    # their DuckDB mirrors here (k_truss / coreness / kn_perplexity /
-    # kmv_users took their registry slots and are covered by the
-    # registry mirror in test_entry_contract)
-    ("latest_capture", Q.q_latest_capture, Q.sql_latest_capture),
-    ("canonical_urls", Q.q_canonical_urls, Q.sql_canonical_urls),
-    ("image_features", Q.q_image_features, Q.sql_image_features),
-    ("salted_user_topk", Q.q_salted_user_topk, Q.sql_salted_user_topk),
-    # round-5 continued-session additions: community-quality +
-    # graph-shape KG-health metrics (modularity over the LPA labels,
-    # degree assortativity with HUGEINT-exact correlation sums) and
-    # the integer-exact weighted priority sample (min-of-w virtual md5
-    # draws — both engines pick the identical sample, no float keys)
-    # round-5 addition: validity-window coalescing (gaps-and-islands
-    # over fact episodes — the temporal-QA companion to fact_allen)
-    ("fact_windows", Q.q_fact_windows, Q.sql_fact_windows),
-    # round-5 addition: corpus distributional diagnostics — Zipf OLS
-    # (fixed-point decimal regression sums) + all-integer Heaps curve
-    # round-5 addition: coordinated-sample Jaccard between keys from
-    # bottom-k sketches, and 1-WL structural role colors (combinable
-    # multiset-sum hash, HUGEINT-replayed rounds)
-    # round-5 addition: clamped-seed type propagation (grid-quantized
-    # rounds) + Mikolov frequent-word subsampling (md5-gate device)
-    # round-5 rotations 25-26 OUT: NP-chunk spotting + Gopher gates
-    # keep their DuckDB mirrors here (meta_triples / jsonld_extract —
-    # the structured-data lane — took their registry slots)
-    ("spot_npchunk", Q.q_spot_npchunk, Q.sql_spot_npchunk),
-    ("quality_gopher", Q.q_quality_gopher, Q.sql_quality_gopher),
-    ("seeded_types", Q.q_seeded_types, Q.sql_seeded_types),
-    ("subsample_tokens", Q.q_subsample_tokens, Q.sql_subsample_tokens),
-    ("kmv_overlap", Q.q_kmv_overlap, Q.sql_kmv_overlap),
-    ("wl_roles", Q.q_wl_roles, Q.sql_wl_roles),
-    ("zipf_fit", Q.q_zipf_fit, Q.sql_zipf_fit),
-    ("vocab_growth", Q.q_vocab_growth, Q.sql_vocab_growth),
-    ("modularity", Q.q_modularity, Q.sql_modularity),
-    ("assortativity", Q.q_assortativity, Q.sql_assortativity),
-    ("priority_sample", Q.q_priority_sample, Q.sql_priority_sample),
-]
-# session-8 note: decontam_overlap + ngram_perplexity rotated INTO the
-# 50-slot registry (fourth rotation) — covered by test_entry_contract's
-# registry mirror, not duplicated here.
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return con
+ROTATED = Q.PAIRS[Q.REGISTERED:]
 
 
 @pytest.mark.parametrize("name,q,sql", ROTATED, ids=[r[0] for r in ROTATED])

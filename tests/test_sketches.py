@@ -76,51 +76,6 @@ def test_p_out_of_range_raises(spark):
         sk.hll_sketch(ev, ["k"], "item", p=30)
 
 
-# -------------------------------------------------------------- stream --
-
-def test_sketch_store_stream_equals_batch(spark, tmp_path):
-    """Drain the events table through maintain_sketch_stream in two
-    slices: the store's registers equal the one-shot batch sketch
-    row-for-row, and re-folding a slice is a no-op (idempotent max)."""
-    from dbpedia_spotlight_spark.streaming.sketch_stream import (
-        SketchStore, maintain_sketch_stream,
-    )
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    ev.filter("event_id % 2 = 0").write.parquet(src)
-    store = SketchStore(str(tmp_path / "store"), ["event_type"],
-                        "user_id", p=8)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = maintain_sketch_stream(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    # second slice arrives later
-    ev.filter("event_id % 2 = 1").write.mode("append").parquet(src)
-    q2 = maintain_sketch_stream(
-        spark.readStream.schema(ev.schema).parquet(src), store,
-        str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
-
-    got = (spark.read.parquet(store.path)
-           .orderBy("event_type", "bucket").collect())
-    want = (sk.hll_sketch(ev, ["event_type"], "user_id", p=8)
-            .orderBy("event_type", "bucket").collect())
-    assert got == want
-
-    # idempotence: folding slice 1 AGAIN changes nothing
-    store.fold(ev.filter("event_id % 2 = 1"))
-    again = (spark.read.parquet(store.path)
-             .orderBy("event_type", "bucket").collect())
-    assert again == want
-
-    est = {r["event_type"]: r["est"]
-           for r in store.counts(spark).collect()}
-    exact = {r["event_type"]: r["n"] for r in
-             ev.groupBy("event_type")
-               .agg(F.countDistinct("user_id").alias("n")).collect()}
-    for k in exact:
-        assert abs(est[k] - exact[k]) / exact[k] < 0.2
-
-
 # --------------------------------------------------------------- bloom --
 
 def test_bloom_never_false_negative_and_fpr_in_range(spark):
@@ -279,85 +234,3 @@ def test_kmv_sketch_is_udf_free(spark):
         .executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
-
-
-def test_kmv_store_stream_equals_batch(spark, tmp_path):
-    """KMV twin of the sketch-store contract: two streamed slices fold
-    to EXACTLY the one-shot batch sketch, re-folding is a no-op, and
-    the store's rows are the coordinated distinct sample."""
-    from dbpedia_spotlight_spark.streaming.sketch_stream import (
-        KmvStore, maintain_sketch_stream,
-    )
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    ev.filter("event_id % 2 = 0").write.parquet(src)
-    store = KmvStore(str(tmp_path / "store"), ["event_type"],
-                     "user_id", k=8)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = maintain_sketch_stream(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    ev.filter("event_id % 2 = 1").write.mode("append").parquet(src)
-    q2 = maintain_sketch_stream(
-        spark.readStream.schema(ev.schema).parquet(src), store,
-        str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
-
-    got = sorted((r["event_type"], r["h"])
-                 for r in store.sample(spark).collect())
-    want = sorted((r["event_type"], r["h"]) for r in
-                  sk.kmv_sketch(ev, ["event_type"], "user_id", k=8)
-                  .collect())
-    assert got == want
-
-    store.fold(ev.filter("event_id % 2 = 1"))  # idempotence
-    again = sorted((r["event_type"], r["h"])
-                   for r in store.sample(spark).collect())
-    assert again == want
-
-    # k=8 on ~15 distinct users per type: estimator branch is active
-    est = {r["event_type"]: r["est"]
-           for r in store.counts(spark).collect()}
-    exact = {r["event_type"]: r["n"] for r in
-             ev.groupBy("event_type")
-               .agg(F.countDistinct("user_id").alias("n")).collect()}
-    for key in exact:
-        assert est[key] > 0
-        assert abs(est[key] - exact[key]) / exact[key] < 1.5  # k tiny
-
-
-def test_kmv_jaccard_tracks_exact_overlap(spark):
-    """Planted overlap: keys X and Y share half their items; the
-    sketch-only estimate tracks the exact Jaccard within the k-bound
-    error, and disjoint keys estimate ~0."""
-    rows = (
-        [Row(k="x", item=f"s{i}") for i in range(600)]        # shared
-        + [Row(k="x", item=f"x{i}") for i in range(300)]
-        + [Row(k="y", item=f"s{i}") for i in range(600)]
-        + [Row(k="y", item=f"y{i}") for i in range(300)]
-        + [Row(k="z", item=f"z{i}") for i in range(400)]
-    )
-    df = spark.createDataFrame(rows)
-    kk = 128
-    sk_df = sk.kmv_sketch(df, ["k"], "item", k=kk)
-    out = {(r.k_a, r.k_b): r for r in
-           sk.kmv_jaccard(sk_df, ["k"], k=kk).collect()}
-    exact_xy = 600 / 1200
-    est = out[("x", "y")]
-    assert abs(est.jaccard_est - exact_xy) < 4 / (kk ** 0.5)
-    assert est.both == int(est.jaccard_est * est.union_k + 0.5)
-    assert out[("x", "z")].jaccard_est < 0.05
-    assert out[("y", "z")].jaccard_est < 0.05
-
-
-def test_kmv_jaccard_exact_when_under_capacity(spark):
-    """Below sketch capacity the sketches hold EVERYTHING, so the
-    estimate is the exact Jaccard."""
-    rows = ([Row(k="a", item=f"s{i}") for i in range(20)]
-            + [Row(k="b", item=f"s{i}") for i in range(10, 40)])
-    df = spark.createDataFrame(rows)
-    sk_df = sk.kmv_sketch(df, ["k"], "item", k=256)
-    r = sk.kmv_jaccard(sk_df, ["k"], k=256).first()
-    assert (r.k_a, r.k_b) == ("a", "b")
-    assert r.union_k == 40
-    assert r.both == 10
-    assert r.jaccard_est == pytest.approx(10 / 40, abs=1e-12)

@@ -1,13 +1,12 @@
 """S2 spot-XML source, S3 wiki-markup source, F5 coreference,
-sessionization (batch ≡ oracle ≡ streaming), streaming annotate ≡ batch
-annotate, and checkpoint-resume (SURVEY §5.2 items 5–6)."""
+streaming annotate ≡ batch annotate, and checkpoint-resume (SURVEY §5.2
+items 5–6)."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,93 +147,6 @@ def test_coreference_config_runs(spark, web_pages, model_bc):
 
 
 # ---------------------------------------------------------------------------
-# sessionization: batch ≡ DuckDB oracle; streaming ≡ batch totals
-# ---------------------------------------------------------------------------
-
-
-def test_sessionize_matches_duckdb(spark):
-    import duckdb
-    from dbpedia_spotlight_spark.operators.sessionize import (
-        sessionize, sql_sessionize,
-    )
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    got = sessionize(ev).toPandas().sort_values(
-        ["user_id", "session_seq"]).reset_index(drop=True)
-    con = duckdb.connect()
-    con.execute("CREATE VIEW events AS SELECT * FROM "
-                "'/root/testdata/sf0.001/events.parquet'")
-    want = con.execute(sql_sessionize()).df().sort_values(
-        ["user_id", "session_seq"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got[sorted(got.columns)], want[sorted(want.columns)],
-        check_dtype=False)
-
-
-def test_sessionize_stream_totals(spark, tmp_path):
-    """applyInPandasWithState sessionization drained with availableNow:
-    per-user event totals must match batch."""
-    from dbpedia_spotlight_spark.operators.sessionize import (
-        sessionize, sessionize_stream,
-    )
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "events")
-    ev.write.mode("overwrite").parquet(src)  # FileStreamSource needs a dir
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = sessionize_stream(stream)
-    q = (out.writeStream.format("parquet")
-         .option("path", str(tmp_path / "out"))
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "out"))
-    batch = sessionize(ev)
-    g = got.groupBy("user_id").agg(F.sum("n_events").alias("n")).collect()
-    b = batch.groupBy("user_id").agg(F.sum("n_events").alias("n")).collect()
-    assert {(r.user_id, r.n) for r in g} == {(r.user_id, r.n) for r in b}
-    # session count per user matches too (single availableNow batch)
-    gs = got.groupBy("user_id").agg(F.max("session_seq").alias("m")).collect()
-    bs = batch.groupBy("user_id").agg(F.max("session_seq").alias("m")).collect()
-    assert {(r.user_id, r.m) for r in gs} == {(r.user_id, r.m) for r in bs}
-
-
-def test_dedup_stream_drops_reingested_clones(spark, tmp_path):
-    """Streaming exact dedup (dropDuplicatesWithinWatermark on the
-    content hash): planted clones arriving within the watermark horizon
-    are dropped; output = one row per distinct text, same keep-set as
-    the batch operator."""
-    from dbpedia_spotlight_spark.streaming.dedup_stream import dedup_stream
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-                .limit(40)
-    clones = docs.filter(F.col("doc_id") < 15).withColumn(
-        "doc_id", F.col("doc_id") + 100000)
-    both = docs.unionByName(clones).withColumn(
-        "ts", F.current_timestamp())
-    src = str(tmp_path / "docs")
-    both.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema).parquet(src)
-    out = dedup_stream(stream, ts_col="ts")
-    assert out.isStreaming
-    q = (out.writeStream.format("parquet")
-         .option("path", str(tmp_path / "out"))
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "out"))
-    n_distinct = both.select("text").distinct().count()
-    assert got.count() == n_distinct
-    assert got.select("text_hash").distinct().count() == n_distinct
-    # batch form agrees on the surviving hash set
-    batch = dedup_stream(spark.read.parquet(src), ts_col="ts")
-    assert ({r.text_hash for r in got.select("text_hash").collect()}
-            == {r.text_hash for r in batch.select("text_hash").collect()})
-
-
-# ---------------------------------------------------------------------------
 # streaming annotate ≡ batch annotate
 # ---------------------------------------------------------------------------
 
@@ -324,23 +236,6 @@ def test_snapshot_time_travel_and_expiry(spark, tmp_path):
         cat.read_snapshot(spark, "t", snapshot_id=0)           # expired
     with pytest.raises(FileNotFoundError):
         cat.read_snapshot(spark, "missing")
-
-
-def test_dedup_stream_batch_map_column_fallback(spark):
-    """Batch first-seen dedup must handle non-orderable columns (maps)
-    via the window fallback and still keep the earliest row by ts."""
-    import datetime as dt
-    from dbpedia_spotlight_spark.streaming.dedup_stream import dedup_stream
-    rows = [
-        (1, "same text", dt.datetime(2024, 1, 1, 10), {"k": "late"}),
-        (2, "same text", dt.datetime(2024, 1, 1, 9), {"k": "early"}),
-        (3, "other", dt.datetime(2024, 1, 1, 8), {"k": "solo"}),
-    ]
-    df = spark.createDataFrame(
-        rows, "id long, text string, ts timestamp, meta map<string,string>")
-    out = dedup_stream(df, ts_col="ts")
-    got = {r["id"]: r["meta"]["k"] for r in out.collect()}
-    assert got == {2: "early", 3: "solo"}
 
 
 # --------------------------------------------------------------- WARC --
